@@ -79,7 +79,7 @@ def _generalize_acctbal(spark, sf_dir):
     col_df = _acctbal_column(spark, sf_dir)
     n = col_df.count()
     g = calculate_number_of_buckets(n, 1)
-    out = generalize(col_df, "acctbal", "double", g, n, F.col("_tie"))
+    out = generalize(col_df, [("acctbal", "double", g, n)], F.col("_tie"))
     return (
         out.filter(F.col("pred") == "acctbal_generalized")
         .select(
@@ -97,7 +97,7 @@ def _generalize_acctbal_bounds(spark, sf_dir):
     col_df = _acctbal_column(spark, sf_dir)
     n = col_df.count()
     g = calculate_number_of_buckets(n, 1)
-    out = generalize(col_df, "acctbal", "double", g, n, F.col("_tie"))
+    out = generalize(col_df, [("acctbal", "double", g, n)], F.col("_tie"))
     bounds = (
         out.filter(F.col("pred").isin([RDF_MIN, RDF_MAX]))
         .groupBy(F.substring_index("subj", "_", -1).try_cast("bigint").alias("bucket"))
@@ -125,7 +125,7 @@ def _generalize_orderdate(spark, sf_dir):
     )
     n = col_df.count()
     g = calculate_number_of_buckets(n, 2)
-    out = generalize(col_df, "odate", "date", g, n, F.col("_tie"))
+    out = generalize(col_df, [("odate", "date", g, n)], F.col("_tie"))
     return (
         out.filter(F.col("pred") == "odate_generalized")
         .select(
@@ -6600,7 +6600,7 @@ def _kg_anon_mention_counts(spark, sf_dir):
     )
     n = col_df.count()
     g = calculate_number_of_buckets(n, 1)
-    out = generalize(col_df, "mentions", "integer", g, n, F.col("_tie"))
+    out = generalize(col_df, [("mentions", "integer", g, n)], F.col("_tie"))
     return out.filter(F.col("pred") == "mentions_generalized").select(
         F.col("subj").try_cast("bigint").alias("doc_id"),
         F.substring_index("obj_value", "_", -1).try_cast("bigint").alias("bucket"),

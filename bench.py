@@ -555,7 +555,7 @@ def _anon_scale_run(spark, n: int = 1_000_000, kanon_only: bool = False) -> dict
     col_df = base.select(subj.alias("subj"), o.cast("string").alias("obj_value"))
     g = calculate_number_of_buckets(n, 1)
     t0 = time.time()
-    generalize(col_df, A, "double", g, n).count()
+    generalize(col_df, [(A, "double", g, n)]).count()
     out["generalize_1m"] = round(time.time() - t0, 3)
     out["generalize_1m_buckets"] = int(g)
     triples.unpersist()

@@ -64,41 +64,35 @@ def flat_json_output(
     # selection matches nothing — data is empty, KPIs still emitted
     if not _ABS_IRI_RE.match(prefix):
         subs = subs.limit(0)
-    mine = triples.join(subs, "subj", "left_semi").persist()
-
-    # literal attributes per resource (getLiteralData)
-    lit_rows = mine.filter(~F.col("obj_is_iri")).select(
-        "subj", "pred", "obj_value"
-    ).collect()
-    attrs_by_subj: dict[str, dict[str, str]] = {}
-    counter_by_subj: dict[str, int] = {}
-    for r in lit_rows:
-        ln = local_name(r["pred"])
-        if ln == "counter":
-            counter_by_subj[r["subj"]] = int(r["obj_value"])
-        d = attrs_by_subj.setdefault(r["subj"], {})
-        if ln != "counter" and ln not in d:
-            d[ln] = r["obj_value"]
-
-    # other types per resource, input order (getTypesForResources)
-    type_rows = mine.filter(
-        (F.col("pred") == RDF_TYPE) & (F.col("obj_value") != flat_type)
-    ).select("subj", "obj_value").collect()
-    types_by_subj: dict[str, list[str]] = {}
-    for r in type_rows:
-        lst = types_by_subj.setdefault(r["subj"], [])
-        ln = local_name(r["obj_value"])
-        if ln not in lst:
-            lst.append(ln)
-
-    # generalization bounds for the quirk-filtered attribute set
+    mine = triples.join(subs, "subj", "left_semi")
     flat_cfg = _flat_config(config)
     bound_attrs = [
         a
         for a, c in flat_cfg.items()
         if c.strategy == "generalization" and c.datatype in _BOUND_DATATYPES
     ]
-    gen_by_subj: dict[str, dict[str, dict]] = {}
+
+    # ONE collect over the union of every predicate slice the response
+    # needs, tagged by slice.  A union returns each branch's rows in the
+    # branch's own order, and output key order follows row order, so each
+    # slice reads exactly as a separate collect of it would.
+    none = F.lit(None).cast("string")
+
+    def tagged(df, tag, pred=none, value=none, lo=none, hi=none):
+        return df.select(
+            F.lit(tag).alias("_t"), "subj", pred.alias("pred"),
+            value.alias("obj_value"), lo.alias("min"), hi.alias("max"),
+        )
+
+    # literal attributes per resource (getLiteralData)
+    slices = [tagged(mine.filter(~F.col("obj_is_iri")), "lit",
+                     F.col("pred"), F.col("obj_value"))]
+    # other types per resource, input order (getTypesForResources)
+    slices.append(tagged(
+        mine.filter((F.col("pred") == RDF_TYPE) & (F.col("obj_value") != flat_type)),
+        "type", value=F.col("obj_value"),
+    ))
+    # generalization bounds for the quirk-filtered attribute set
     if bound_attrs:
         gen_preds = [a + "_generalized" for a in bound_attrs]
         assign = mine.filter(F.col("pred").isin(gen_preds)).select(
@@ -112,11 +106,55 @@ def flat_json_output(
                 F.first(F.when(F.col("pred") == RDF_MAX, F.col("obj_value")), True).alias("max"),
             )
         )
-        for r in assign.join(F.broadcast(bounds), "bucket", "left").collect():
-            gen_by_subj.setdefault(r["subj"], {})[local_name(r["pred"])] = {
+        slices.append(tagged(
+            assign.join(F.broadcast(bounds), "bucket", "left"), "gen",
+            F.col("pred"), lo=F.col("min"), hi=F.col("max"),
+        ))
+    if calculate_kpi:
+        kpi_preds = [K_ANONYMITY, HAS_ATTRIBUTE, ANONYMIZATION_TYP, NR_BUCKETS]
+        slices.append(tagged(
+            triples.filter(F.col("pred").isin(kpi_preds)), "kpi",
+            F.col("pred"), F.col("obj_value"),
+        ))
+    rows = slices[0]
+    for sl in slices[1:]:
+        rows = rows.unionByName(sl)
+
+    attrs_by_subj: dict[str, dict[str, str]] = {}
+    counter_by_subj: dict[str, int] = {}
+    types_by_subj: dict[str, list[str]] = {}
+    gen_by_subj: dict[str, dict[str, dict]] = {}
+    k_by_obj: dict[str, int] = {}
+    has_attr: list[tuple[str, str]] = []
+    anon_typ: dict[str, str] = {}
+    nr_buckets: dict[str, int] = {}
+    for r in rows.collect():
+        tag, subj = r["_t"], r["subj"]
+        if tag == "lit":
+            ln = local_name(r["pred"])
+            if ln == "counter":
+                counter_by_subj[subj] = int(r["obj_value"])
+            d = attrs_by_subj.setdefault(subj, {})
+            if ln != "counter" and ln not in d:
+                d[ln] = r["obj_value"]
+        elif tag == "type":
+            lst = types_by_subj.setdefault(subj, [])
+            ln = local_name(r["obj_value"])
+            if ln not in lst:
+                lst.append(ln)
+        elif tag == "gen":
+            gen_by_subj.setdefault(subj, {})[local_name(r["pred"])] = {
                 "min": r["min"] if r["min"] is not None else "obfuscated",
                 "max": r["max"] if r["max"] is not None else "obfuscated",
             }
+        elif r["pred"] == K_ANONYMITY:
+            k_by_obj[subj] = int(r["obj_value"])
+        elif r["pred"] == HAS_ATTRIBUTE:
+            has_attr.append((subj, r["obj_value"]))
+        elif r["pred"] == ANONYMIZATION_TYP:
+            anon_typ[subj] = r["obj_value"]
+        else:
+            nr_buckets[subj] = int(r["obj_value"])
 
     data = []
     all_subj = sorted(
@@ -133,32 +171,14 @@ def flat_json_output(
 
     kpis: dict = {}
     if calculate_kpi:
-        k_rows = triples.filter(F.col("pred") == K_ANONYMITY).select(
-            "subj", "obj_value"
-        ).collect()
-        k_by_obj = {r["subj"]: int(r["obj_value"]) for r in k_rows}
-        has_attr = triples.filter(F.col("pred") == HAS_ATTRIBUTE).select(
-            "subj", "obj_value"
-        ).collect()
-        attr_info_rows = triples.filter(
-            F.col("pred").isin([ANONYMIZATION_TYP, NR_BUCKETS])
-        ).select("subj", "pred", "obj_value").collect()
-        anon_typ = {}
-        nr_buckets = {}
-        for r in attr_info_rows:
-            if r["pred"] == ANONYMIZATION_TYP:
-                anon_typ[r["subj"]] = r["obj_value"]
-            else:
-                nr_buckets[r["subj"]] = int(r["obj_value"])
         for type_iri in config:
             kpi_obj = KPI_OBJECT_URI + local_name(type_iri)
             if kpi_obj not in k_by_obj:
                 continue
             node = {"k-Anonymity": k_by_obj[kpi_obj]}
-            for r in has_attr:
-                if r["subj"] != kpi_obj:
+            for subj, attr in has_attr:
+                if subj != kpi_obj:
                     continue
-                attr = r["obj_value"]
                 info = {"anonymization": anon_typ.get(attr)}
                 if attr in nr_buckets:
                     info["nrBuckets"] = nr_buckets[attr]

@@ -5,11 +5,12 @@ k-anonymity = min over resources of |generalization-group(r) ∩
 benchmark = 2·mean(|orig − rand|) and null originals form their own
 similarity group (KpiService.java:75-154).
 
-Implemented as a null-safe self-join on the generalization group key plus one
-range predicate per randomized attribute — no driver-side sets.  At corpus
-scale the pair join is bounded by the largest group; AQE skew-join plus
-salting on the group key is the documented mitigation (the k-statistic itself
-only needs per-resource counts, which stay distributed).
+Every counting path reads projections of ONE per-subject pivot (group-key
+columns plus orig/randomized values per randomized attribute, built by a
+single conditional aggregation); the benchmarks and the subject count come
+from one aggregation over it.  The request-size path is a null-safe
+self-join of the pivot with every range predicate in the join condition —
+no driver-side sets; the scale paths never materialize a pair.
 """
 
 from __future__ import annotations
@@ -68,7 +69,7 @@ def _kpi_parse(datatype: str, c):
     strict cast would error on non-numeric literals from other predicates.
     Values reaching the KPI are validated upstream — null means absent."""
     if datatype in ("date", "dateTime"):
-        ts = F.coalesce(F.to_timestamp(F.to_date(c)), F.to_timestamp(c))
+        ts = F.coalesce(F.try_to_timestamp(F.try_to_date(c)), F.try_to_timestamp(c))
         return F.unix_timestamp(ts).cast("double")
     return c.try_cast("double")
 
@@ -129,203 +130,182 @@ def k_anonymity(
     All paths produce identical k (property-tested against each other).
     """
     subjects = subjects_of_type(triples, type_iri)
-    ent = subjects
-    gcols: list[str] = []
-    # one cheap pred-distinct probe (partition-pruning scan on the
-    # pred-partitioned sink): an attribute with NO _generalized triples
-    # would only contribute a constant-null field to the group key — it
-    # cannot change group membership — so skip its subject-spine join
-    # entirely instead of dragging a null column through every downstream
-    # shuffle (the all-randomized config is the common KPI shape)
-    gen_preds = [a + "_generalized" for a in used_attrs]
-    present = (
-        {
-            r["pred"]
-            for r in triples.filter(F.col("pred").isin(gen_preds))
-            .select("pred").distinct().collect()
-        }
-        if gen_preds
-        else set()
-    )
-    for i, attr in enumerate(used_attrs):
-        if attr + "_generalized" not in present:
-            continue
-        gp = (
-            triples.filter(F.col("pred") == attr + "_generalized")
-            .select("subj", F.col("obj_value").alias(f"_g{i}"))
-            .dropDuplicates(["subj"])
-        )
-        ent = ent.join(gp, "subj", "left")
-        gcols.append(f"_g{i}")
-
     rand_attrs = [a for a in used_attrs if cfgs[a].strategy == "randomization"]
-    if not rand_attrs:
-        row = ent.groupBy(*[F.col(c) for c in gcols] if gcols else [F.lit(1)]).count().agg(
-            F.min("count").alias("k")
-        ).collect()[0]
-        if row["k"] is None:
-            # reference quirk (QueryBuildingService.java:142-163 +
-            # QueryService.java:215-235): with zero attributes the groups
-            # query has NO GROUP BY, so the aggregate over zero rows still
-            # yields one row whose empty GROUP_CONCAT splits into a single
-            # empty-IRI resource — one group of size 1 ⇒ k = 1.  With
-            # attributes (GROUP BY present) zero rows ⇒ no groups ⇒ k = 0.
-            return 1 if not used_attrs else 0
-        return int(row["k"])
 
-    # per-attribute column vectors + the global benchmark (2·mean |o − r|,
-    # computed over the whole type like the reference — never per group)
-    fused: list[DataFrame] = []
-    for attr in rand_attrs:
-        dtp = cfgs[attr].datatype
-        # ONE shuffle extracts both column vectors: the orig and
-        # randomized pred-slices fold into (_o, _r) via conditional
-        # aggregation (map-side combinable), replacing two separate
-        # pred-filter + semi-join + dropDuplicates pipelines.  max() picks
-        # one value per subject like the reference's pivot OPTIONAL binding
-        # (attrs are single-valued in every fixture; for a multi-valued
-        # subject the pick is the max instead of an arbitrary row).
-        # _po/_pr flag pred PRESENCE independent of parse success — the
-        # benchmark denominator needs them.  Persisted: the benchmark
-        # collect materializes it once and every counting path re-joins it.
-        both = (
-            triples.filter(F.col("pred").isin(attr, attr + "_randomized"))
-            .join(subjects, "subj", "left_semi")
+    # ONE per-subject pivot by conditional aggregation: a group-key column
+    # _g{i} per used attribute, and per randomized attribute j the parsed
+    # original/randomized values (_o{j}, _r{j}) plus pred PRESENCE flags
+    # (_po{j}, _pr{j}) independent of parse success — the benchmark
+    # denominator needs them.  max() picks one value per subject like the
+    # reference's pivot OPTIONAL binding (attrs are single-valued in every
+    # fixture; for a multi-valued subject the pick is the max instead of an
+    # arbitrary row).  The left join keeps subjects without any value.
+    pred, val = F.col("pred"), F.col("obj_value")
+    aggs = [
+        F.max(F.when(pred == a + "_generalized", val)).alias(f"_g{i}")
+        for i, a in enumerate(used_attrs)
+    ]
+    preds = [a + "_generalized" for a in used_attrs]
+    for j, a in enumerate(rand_attrs):
+        dtp = cfgs[a].datatype
+        is_o, is_r = pred == a, pred == a + "_randomized"
+        aggs += [
+            F.max(F.when(is_o, _kpi_parse(dtp, val))).alias(f"_o{j}"),
+            F.max(F.when(is_r, _kpi_parse(dtp, val))).alias(f"_r{j}"),
+            F.max(F.when(is_o, F.lit(1))).alias(f"_po{j}"),
+            F.max(F.when(is_r, F.lit(1))).alias(f"_pr{j}"),
+        ]
+        preds += [a, a + "_randomized"]
+    pivot = subjects
+    if aggs:
+        pivot = (
+            subjects.join(
+                triples.filter(pred.isin(preds)).select("subj", "pred", "obj_value"),
+                "subj", "left",
+            )
             .groupBy("subj")
-            .agg(
-                F.max(
-                    F.when(F.col("pred") == attr,
-                           _kpi_parse(dtp, F.col("obj_value")))
-                ).alias("_o"),
-                F.max(
-                    F.when(F.col("pred") == attr + "_randomized",
-                           _kpi_parse(dtp, F.col("obj_value")))
-                ).alias("_r"),
-                F.max(F.when(F.col("pred") == attr, F.lit(1))).alias("_po"),
-                F.max(
-                    F.when(F.col("pred") == attr + "_randomized", F.lit(1))
-                ).alias("_pr"),
-            )
-            .persist()
+            .agg(*aggs)
         )
-        fused.append(both)
+    pivot = pivot.persist()
 
-    # ONE action collects every attribute's benchmark scalar (a union of
-    # single-row aggs — one driver barrier total, not one per attribute).
-    # Denominator c counts subjects with both preds PRESENT even when a
-    # value fails _kpi_parse (the reference's inner-join denominator:
-    # SUM skips null |o−r| terms, COUNT(*) over the join doesn't); a
-    # c>0/all-unparseable stratum degenerates to s=0 ⇒ benchmark 0.
-    stats_union = None
-    for i, both in enumerate(fused):
-        st = both.agg(
-            F.sum(F.abs(F.col("_o") - F.col("_r"))).cast("double").alias("s"),
+    # ONE action: the subject count, per used attribute the count of
+    # subjects with a generalization value, and per randomized attribute the
+    # benchmark sums.  Denominator c counts subjects with both preds PRESENT
+    # even when a value fails _kpi_parse (the reference's inner-join
+    # denominator: SUM skips null |o−r| terms, COUNT(*) over the join
+    # doesn't); a c>0/all-unparseable stratum degenerates to s=0 ⇒
+    # benchmark 0.
+    stats = [F.count(F.lit(1)).alias("_n")]
+    stats += [F.count(f"_g{i}").alias(f"_ng{i}") for i in range(len(used_attrs))]
+    for j in range(len(rand_attrs)):
+        stats += [
+            F.sum(F.abs(F.col(f"_o{j}") - F.col(f"_r{j}"))).cast("double").alias(f"_s{j}"),
             F.count(
-                F.when(F.col("_po").isNotNull() & F.col("_pr").isNotNull(), 1)
-            ).alias("c"),
-            F.count(F.col("_o")).alias("n_o"),
-        ).select(F.lit(i).alias("_i"), "s", "c", "n_o")
-        stats_union = st if stats_union is None else stats_union.unionByName(st)
-    # the subject-spine cardinality rides the SAME action as one more
-    # union leg (_i = -1): the auto dispatch and the ranges null stratum
-    # both need it, and a separate .count() would be one more driver
-    # barrier — pure fixed cost that the N→4N scaling pair cannot
-    # parallelize away
-    stats_union = stats_union.unionByName(
-        subjects.agg(F.count(F.lit(1)).cast("double").alias("s")).select(
-            F.lit(-1).alias("_i"), "s",
-            F.lit(0).cast("long").alias("c"),
-            F.lit(0).cast("long").alias("n_o"),
-        )
-    )
-    stats_by_i = {r["_i"]: r for r in stats_union.collect()}
-    n_subj_total = int(stats_by_i[-1]["s"])
-
-    attr_data: list[tuple] = []
-    for i, (attr, both) in enumerate(zip(rand_attrs, fused)):
-        st = stats_by_i[i]
-        bench = (2.0 * (st["s"] or 0.0) / st["c"]) if st["c"] else None
-        orig = both.filter(F.col("_o").isNotNull()).select("subj", "_o")
-        rand = both.filter(F.col("_r").isNotNull()).select("subj", "_r")
-        attr_data.append((attr, orig, rand, bench))
-
-    if mode == "auto":
-        if n_subj_total <= pair_threshold:
-            mode = "pairs"
-        elif len(rand_attrs) == 1:
-            mode = "ranges"
-        elif len(rand_attrs) == 2:
-            # grid collapses per-group cell counts to DRIVER prefix-sum
-            # matrices — ~(grid+1)² int64 ≈ 0.5 MB each.  That is the right
-            # trade only for FEW groups (the giant-group skew case it was
-            # built for); many groups would accumulate GBs on the driver, so
-            # route those to sliced, which is exact and executor-resident.
-            n_groups = (
-                _with_group_struct(ent, gcols)
-                .agg(F.countDistinct("_gs").alias("n"))
-                .collect()[0]["n"]
-            )
-            mode = "grid" if n_groups <= grid_group_budget else "sliced"
-        else:
-            mode = "sliced"
-    if mode == "ranges" and len(rand_attrs) != 1:
-        mode = "grid" if len(rand_attrs) == 2 else "sliced"
-    if mode == "grid" and len(rand_attrs) != 2:
-        mode = "ranges" if len(rand_attrs) == 1 else "sliced"
-    if mode in ("grouped", "sliced") and len(rand_attrs) == 1:
-        mode = "ranges"
-
-    global _last_mode
-    _last_mode = mode
+                F.when(F.col(f"_po{j}").isNotNull() & F.col(f"_pr{j}").isNotNull(), 1)
+            ).alias(f"_c{j}"),
+            F.count(f"_o{j}").alias(f"_no{j}"),
+        ]
     try:
+        st = pivot.agg(*stats).collect()[0]
+        # an attribute no subject has a generalization value for only adds a
+        # constant-null field to the group key — it cannot change groups
+        gcols = [f"_g{i}" for i in range(len(used_attrs)) if st[f"_ng{i}"]]
+        if not rand_attrs:
+            keys = [F.col(c) for c in gcols] if gcols else [F.lit(1)]
+            row = pivot.groupBy(*keys).count().agg(F.min("count").alias("k")).collect()[0]
+            if row["k"] is None:
+                # reference quirk (QueryBuildingService.java:142-163 +
+                # QueryService.java:215-235): with zero attributes the
+                # groups query has NO GROUP BY, so the aggregate over zero
+                # rows still yields one row whose empty GROUP_CONCAT splits
+                # into a single empty-IRI resource — one group of size 1 ⇒
+                # k = 1.  With attributes (GROUP BY present) zero rows ⇒ no
+                # groups ⇒ k = 0.
+                return 1 if not used_attrs else 0
+            return int(row["k"])
+        # the global benchmark (2·mean |o − r|, computed over the whole type
+        # like the reference — never per group)
+        benches = [
+            (2.0 * (st[f"_s{j}"] or 0.0) / st[f"_c{j}"]) if st[f"_c{j}"] else None
+            for j in range(len(rand_attrs))
+        ]
+        n_subj_total = int(st["_n"])
+
+        if mode == "auto":
+            if n_subj_total <= pair_threshold:
+                mode = "pairs"
+            elif len(rand_attrs) == 1:
+                mode = "ranges"
+            elif len(rand_attrs) == 2:
+                # grid collapses per-group cell counts to DRIVER prefix-sum
+                # matrices — ~(grid+1)² int64 ≈ 0.5 MB each.  That is the
+                # right trade only for FEW groups (the giant-group skew case
+                # it was built for); many groups would accumulate GBs on the
+                # driver, so route those to sliced, which is exact and
+                # executor-resident.
+                n_groups = (
+                    _with_group_struct(pivot, gcols)
+                    .agg(F.countDistinct("_gs").alias("n"))
+                    .collect()[0]["n"]
+                )
+                mode = "grid" if n_groups <= grid_group_budget else "sliced"
+            else:
+                mode = "sliced"
+        if mode == "ranges" and len(rand_attrs) != 1:
+            mode = "grid" if len(rand_attrs) == 2 else "sliced"
+        if mode == "grid" and len(rand_attrs) != 2:
+            mode = "ranges" if len(rand_attrs) == 1 else "sliced"
+        if mode in ("grouped", "sliced") and len(rand_attrs) == 1:
+            mode = "ranges"
+
+        global _last_mode
+        _last_mode = mode
         if mode == "pairs":
-            return _k_pairs(subjects, ent, gcols, attr_data)
+            return _k_pairs(pivot, gcols, benches)
         if mode == "ranges":
-            return _k_ranges(
-                subjects, ent, gcols, attr_data[0], fused[0],
-                counts=(n_subj_total, int(stats_by_i[0]["n_o"])),
-            )
+            return _k_ranges(pivot, gcols, benches[0],
+                             counts=(n_subj_total, int(st["_no0"])))
         if mode == "grid":
-            return _k_grid(subjects, ent, gcols, attr_data)
+            return _k_grid(pivot, gcols, benches)
         if mode == "grouped":
-            return _k_grouped(subjects, ent, gcols, attr_data)
+            return _k_grouped(pivot, gcols, benches)
         if mode == "sliced":
-            return _k_sliced(subjects, ent, gcols, attr_data)
+            return _k_sliced(pivot, gcols, benches)
         raise ValueError(f"unknown k-anonymity mode: {mode!r}")
     finally:
-        for both in fused:
-            both.unpersist()
+        pivot.unpersist()
 
 
-def _k_pairs(subjects, ent, gcols, attr_data) -> int:
-    """Null-safe group-key self-join + range predicates (small-input path)."""
-    a = ent.select(F.col("subj").alias("_sa"), *[F.col(c).alias(c + "_a") for c in gcols])
-    b = ent.select(F.col("subj").alias("_sb"), *[F.col(c).alias(c + "_b") for c in gcols])
+def _values(pivot, gcols, nrand: int):
+    """(subj, group-key columns, _o{j}, _r{j}) projection of the pivot."""
+    cols = [f"_{p}{j}" for j in range(nrand) for p in ("o", "r")]
+    return pivot.select("subj", *gcols, *cols)
+
+
+def _min_count(pivot, cnts) -> int:
+    """min over every subject of its match count (0 when it has none)."""
+    row = (
+        pivot.select("subj")
+        .join(cnts, "subj", "left")
+        .select(F.min(F.coalesce(F.col("_cnt"), F.lit(0))).alias("k"))
+        .collect()[0]
+    )
+    return int(row["k"]) if row["k"] is not None else 0
+
+
+def _k_pairs(pivot, gcols, benches) -> int:
+    """ONE null-safe self-join of the pivot: group keys and every range
+    predicate sit in the join condition (small-input path)."""
+    nrand = len(benches)
+    a = pivot.select(
+        F.col("subj").alias("_sa"),
+        *[F.col(c).alias(c + "_a") for c in gcols],
+        *[F.col(f"_o{j}").alias(f"_oa{j}") for j in range(nrand)],
+        *[F.col(f"_r{j}").alias(f"_ra{j}") for j in range(nrand)],
+    )
+    b = pivot.select(
+        F.col("subj").alias("_sb"),
+        *[F.col(c).alias(c + "_b") for c in gcols],
+        *[F.col(f"_o{j}").alias(f"_ob{j}") for j in range(nrand)],
+    )
     cond = F.lit(True)
     for c in gcols:
         cond = cond & F.col(c + "_a").eqNullSafe(F.col(c + "_b"))
-    pairs = a.join(b, cond)
-
-    for j, (_, orig, rand, bench) in enumerate(attr_data):
-        oa = orig.select(F.col("subj").alias("_sa"), F.col("_o").alias(f"_oa{j}"))
-        ob = orig.select(F.col("subj").alias("_sb"), F.col("_o").alias(f"_ob{j}"))
-        ra = rand.select(F.col("subj").alias("_sa"), F.col("_r").alias(f"_ra{j}"))
-        pairs = pairs.join(oa, "_sa", "left").join(ob, "_sb", "left").join(ra, "_sa", "left")
-        null_pair = F.col(f"_oa{j}").isNull() & F.col(f"_ob{j}").isNull()
-        if bench is None:
-            pairs = pairs.filter(null_pair)
-        else:
-            in_range = (
-                F.col(f"_oa{j}").isNotNull()
-                & F.col(f"_ob{j}").isNotNull()
-                & (F.abs(F.col(f"_ob{j}") - F.col(f"_ra{j}")) <= F.lit(bench))
+    for j, bench in enumerate(benches):
+        oa, ob, ra = F.col(f"_oa{j}"), F.col(f"_ob{j}"), F.col(f"_ra{j}")
+        match = oa.isNull() & ob.isNull()
+        if bench is not None:
+            match = match | (
+                oa.isNotNull() & ob.isNotNull() & (F.abs(ob - ra) <= F.lit(bench))
             )
-            pairs = pairs.filter(null_pair | in_range)
-
-    cnts = pairs.groupBy("_sa").count()
+        cond = cond & match
+    # the left join keeps every subject; count(_sb) is 0 for one without a
+    # match (a subject need not match itself: |o − r| may exceed the bound)
     row = (
-        subjects.join(cnts, subjects["subj"] == cnts["_sa"], "left")
-        .select(F.min(F.coalesce(F.col("count"), F.lit(0))).alias("k"))
+        a.join(b, cond, "left")
+        .groupBy("_sa")
+        .agg(F.count("_sb").alias("_cnt"))
+        .agg(F.min("_cnt").alias("k"))
         .collect()[0]
     )
     return int(row["k"]) if row["k"] is not None else 0
@@ -424,29 +404,23 @@ def _stratum_size_counts(stratum) -> "DataFrame":
     return stratum.join(ncnt, "_gs").select("subj", "_cnt")
 
 
-def _k_ranges(subjects, ent, gcols, attr_datum, both=None,
-              counts=None) -> int:
+def _k_ranges(pivot, gcols, bench, counts) -> int:
     """Distributed subMap counting for ONE randomized attribute (see
-    :func:`_counts_1d` for the event/prefix-sum core)."""
-    _, orig, rand, bench = attr_datum
-    if both is not None and not gcols:
+    :func:`_counts_1d` for the event/prefix-sum core).  ``counts`` is
+    (subjects, subjects with a parsed original) from the caller's stats
+    action."""
+    cleanup: list = []
+    if not gcols:
         # no generalization groups anywhere: every subject is in the one
         # group, so the null stratum's count is a single number (subjects
         # minus non-null-_o rows) and the event stream runs straight off
-        # the fused frame — the subject-spine string join disappears from
-        # the job entirely (this path is memory-bandwidth-bound; see
-        # _counts_1d)
-        cleanup: list = []
-        nonnull = both.filter(F.col("_o").isNotNull())
-        if counts is not None:
-            # cardinalities pre-computed in the caller's one fused stats
-            # action — two fewer driver barriers in the hot path
-            n_subj, n_nonnull = counts
-        else:
-            n_subj = subjects.count()
-            n_nonnull = nonnull.count()
+        # the pivot — the subject-spine string join disappears from the job
+        # entirely (this path is memory-bandwidth-bound; see _counts_1d)
+        n_subj, n_nonnull = counts
         cnt_nonnull = _counts_1d(
-            nonnull.select(F.lit(0).alias("_gs"), "_o", "_r"),
+            pivot.filter(F.col("_o0").isNotNull()).select(
+                F.lit(0).alias("_gs"), F.col("_o0").alias("_o"), F.col("_r0").alias("_r")
+            ),
             bench, cleanup, keep_subj=False,
         )
         row = cnt_nonnull.select(F.min("_cnt").alias("k")).collect()[0]
@@ -456,22 +430,10 @@ def _k_ranges(subjects, ent, gcols, attr_datum, both=None,
         cands = [v for v in (row["k"], n_null if n_null > 0 else None)
                  if v is not None]
         return int(min(cands)) if cands else 0
-    if both is not None:
-        # the fused (subj, _o, _r) frame — ONE left join off the subject
-        # spine instead of two (orig/rand are both slices of it; a null _o
-        # or _r lands identically either way)
-        vals = both.select("subj", "_o", "_r")
-        joined = ent.join(vals, "subj", "left")
-    else:
-        joined = ent.join(orig, "subj", "left").join(rand, "subj", "left")
-    if gcols:
-        base = _with_group_struct(joined, gcols).persist()
-    else:
-        # no generalization groups: a constant int sort key beats carrying
-        # a constant struct through the 3n-row range shuffle
-        base = joined.withColumn("_gs", F.lit(0)).persist()
-
-    cleanup: list = []
+    base = _with_group_struct(
+        pivot.select("subj", *gcols, F.col("_o0").alias("_o"), F.col("_r0").alias("_r")),
+        gcols,
+    )
     cnt_null = _stratum_size_counts(
         base.filter(F.col("_o").isNull()).select("subj", "_gs")
     ).select("_cnt")
@@ -482,12 +444,11 @@ def _k_ranges(subjects, ent, gcols, attr_datum, both=None,
         base.filter(F.col("_o").isNotNull()), bench, cleanup, keep_subj=False
     )
 
-    # the two strata partition `base`, and `base` keeps every subject (left
-    # joins off the subject spine), so cnts already covers all subjects —
-    # no join back needed, min() over the union is the answer
+    # the two strata partition the pivot, which holds every subject, so
+    # cnts already covers all subjects — no join back needed, min() over the
+    # union is the answer
     cnts = cnt_nonnull.unionByName(cnt_null)
     row = cnts.select(F.min("_cnt").alias("k")).collect()[0]
-    base.unpersist()
     for d in cleanup:
         d.unpersist()
     return int(row["k"]) if row["k"] is not None else 0
@@ -631,7 +592,7 @@ def _grid_counts_2d(stratum, b0, b1, grid: int = 256) -> "DataFrame":
     return out
 
 
-def _k_grid(subjects, ent, gcols, attr_data, grid: int = 256) -> int:
+def _k_grid(pivot, gcols, benches, grid: int = 256) -> int:
     """Scalable k-anonymity for EXACTLY TWO randomized attributes.
 
     Rows partition by (group, null-pattern) — the pair predicate forces a
@@ -640,14 +601,8 @@ def _k_grid(subjects, ent, gcols, attr_data, grid: int = 256) -> int:
     event/prefix-sum counter on the non-null attribute, both-non-null → the
     2-D grid counter (:func:`_grid_counts_2d`).  No pair set anywhere.
     """
-    (a0, orig0, rand0, b0), (a1, orig1, rand1, b1) = attr_data
-    base = _with_group_struct(
-        ent.join(orig0.select("subj", F.col("_o").alias("_o0")), "subj", "left")
-        .join(rand0.select("subj", F.col("_r").alias("_r0")), "subj", "left")
-        .join(orig1.select("subj", F.col("_o").alias("_o1")), "subj", "left")
-        .join(rand1.select("subj", F.col("_r").alias("_r1")), "subj", "left"),
-        gcols,
-    )
+    b0, b1 = benches
+    base = _with_group_struct(_values(pivot, gcols, 2), gcols)
     # dense integer group ids (broadcast-joined) so the grid path can key
     # its driver-side prefix matrices
     gid_map = (
@@ -686,33 +641,22 @@ def _k_grid(subjects, ent, gcols, attr_data, grid: int = 256) -> int:
     cnts = parts[0]
     for p in parts[1:]:
         cnts = cnts.unionByName(p)
-    row = (
-        subjects.join(cnts, "subj", "left")
-        .select(F.min(F.coalesce(F.col("_cnt"), F.lit(0))).alias("k"))
-        .collect()[0]
-    )
+    k = _min_count(pivot, cnts)
     base.unpersist()
     for d in cleanup:
         d.unpersist()
-    return int(row["k"]) if row["k"] is not None else 0
+    return k
 
 
-def _k_grouped(subjects, ent, gcols, attr_data) -> int:
+def _k_grouped(pivot, gcols, benches) -> int:
     """Per-group vectorized counting for ≥2 randomized attributes: sort the
     group by attribute 0, searchsorted window per resource, numpy-verify the
     remaining attributes over the window (no shuffled pair set)."""
     import numpy as np
     import pandas as pd
 
-    full = ent
-    for j, (_, orig, rand, _) in enumerate(attr_data):
-        full = (
-            full.join(orig.select("subj", F.col("_o").alias(f"_o{j}")), "subj", "left")
-            .join(rand.select("subj", F.col("_r").alias(f"_r{j}")), "subj", "left")
-        )
-    full = _with_group_struct(full, gcols)
-    benches = [b for (_, _, _, b) in attr_data]
-    nattrs = len(attr_data)
+    nattrs = len(benches)
+    full = _with_group_struct(_values(pivot, gcols, nattrs), gcols)
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
@@ -753,15 +697,10 @@ def _k_grouped(subjects, ent, gcols, attr_data) -> int:
         return pd.DataFrame({"subj": pdf["subj"], "_cnt": counts})
 
     cnts = full.groupBy("_gs").applyInPandas(fn, "subj string, _cnt long")
-    row = (
-        subjects.join(cnts, "subj", "left")
-        .select(F.min(F.coalesce(F.col("_cnt"), F.lit(0))).alias("k"))
-        .collect()[0]
-    )
-    return int(row["k"]) if row["k"] is not None else 0
+    return _min_count(pivot, cnts)
 
 
-def _k_sliced(subjects, ent, gcols, attr_data) -> int:
+def _k_sliced(pivot, gcols, benches) -> int:
     """Skew-immune counting for ≥2 randomized attributes (the ≥3-attr scale
     path; see :func:`k_anonymity` ``mode="sliced"``).
 
@@ -781,15 +720,8 @@ def _k_sliced(subjects, ent, gcols, attr_data) -> int:
     import numpy as np
     import pandas as pd
 
-    full = ent
-    for j, (_, orig, rand, _) in enumerate(attr_data):
-        full = (
-            full.join(orig.select("subj", F.col("_o").alias(f"_o{j}")), "subj", "left")
-            .join(rand.select("subj", F.col("_r").alias(f"_r{j}")), "subj", "left")
-        )
-    full = _with_group_struct(full, gcols).persist()
-    benches = [b for (_, _, _, b) in attr_data]
-    d = len(attr_data)
+    d = len(benches)
+    full = _with_group_struct(_values(pivot, gcols, d), gcols)
 
     patterns = [
         tuple(r[f"_p{j}"] for j in range(d))
@@ -878,10 +810,4 @@ def _k_sliced(subjects, ent, gcols, attr_data) -> int:
     cnts = parts[0]
     for p in parts[1:]:
         cnts = cnts.unionByName(p)
-    row = (
-        subjects.join(cnts, "subj", "left")
-        .select(F.min(F.coalesce(F.col("_cnt"), F.lit(0))).alias("k"))
-        .collect()[0]
-    )
-    full.unpersist()
-    return int(row["k"]) if row["k"] is not None else 0
+    return _min_count(pivot, cnts)

@@ -22,14 +22,17 @@ NUMERIC_DATATYPES = ("integer", "double")
 
 
 def parse_col(datatype: str, c: Column) -> Column:
-    """Lexical obj_value → sortable double column."""
+    """Lexical obj_value → sortable double column.
+
+    ANSI-safe: the ``try_`` parsers turn a malformed value into NULL, as the
+    plain parsers do with ANSI mode off, instead of failing the query."""
     if datatype in NUMERIC_DATATYPES:
-        return c.cast("double")
+        return c.try_cast("double")
     if datatype == "date":
-        return F.datediff(F.to_date(c), F.lit("1970-01-01")).cast("double")
+        return F.datediff(F.try_to_date(c), F.lit("1970-01-01")).cast("double")
     if datatype == "dateTime":
         # xsd:date-or-dateTime fallback parse (RandomizationDateTime.java:58-70)
-        ts = F.coalesce(F.to_timestamp(c), F.to_timestamp(F.to_date(c)))
+        ts = F.coalesce(F.try_to_timestamp(c), F.try_to_timestamp(F.try_to_date(c)))
         return F.unix_timestamp(ts).cast("double")
     raise ValueError(f"unsupported datatype for value parsing: {datatype}")
 

@@ -16,7 +16,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kgforge.anonymize.engine import AnonymizationReport, anonymize_triples
+from kgforge.anonymize.engine import (
+    AnonymizationReport,
+    anonymize_triples,
+    release_checkpoints,
+)
 from kgforge.anonymize.flat_output import flat_json_output
 from kgforge.config import CONFIG_BY_URL, AnonymizationConfig, fetch_config
 from kgforge.ingest import flat_rows_to_triples, jsonld_to_triples
@@ -152,6 +156,7 @@ def anonymize_flat_json(
     prefix = request["prefix"]
     triples = flat_rows_to_triples(spark, request["data"], prefix)
     calculate_kpi = request.get("calculateKpi", True)
+    checkpoints: list = []
     out, _report = anonymize_triples(
         triples,
         cfg,
@@ -160,8 +165,12 @@ def anonymize_flat_json(
         use_adjusted_attributes=request.get("useAdjustedAttributes", True),
         random_seed=request.get("randomSeed"),
         order_pred=prefix + "counter",
+        checkpoints=checkpoints,
     )
-    return flat_json_output(out, cfg, prefix, calculate_kpi)
+    try:
+        return flat_json_output(out, cfg, prefix, calculate_kpi)
+    finally:
+        release_checkpoints(checkpoints)
 
 
 def anonymize_jsonld_response(
@@ -176,10 +185,14 @@ def anonymize_jsonld_response(
     reference's Jena writer output)."""
     from kgforge.jsonld_out import serialize_jsonld
 
-    out, _report = anonymize_jsonld(spark, request, config, transport)
+    checkpoints: list = []
+    out, _report = anonymize_jsonld(spark, request, config, transport, checkpoints)
     data = request.get("data")
     context = data.get("@context") if isinstance(data, dict) else None
-    return serialize_jsonld(out, context if isinstance(context, dict) else None)
+    try:
+        return serialize_jsonld(out, context if isinstance(context, dict) else None)
+    finally:
+        release_checkpoints(checkpoints)
 
 
 def anonymize_jsonld(
@@ -187,8 +200,10 @@ def anonymize_jsonld(
     request: dict,
     config: AnonymizationConfig | None = None,
     transport=None,
+    checkpoints: list | None = None,
 ) -> tuple[DataFrame, AnonymizationReport]:
-    """PUT /api/anonymization equivalent: returns the anonymized triple table."""
+    """PUT /api/anonymization equivalent: returns the anonymized triple table
+    (``checkpoints`` as in :func:`anonymize_triples`)."""
     _validate_request(request, flat=False)
     cfg = resolve_config(request.get("configurationUrl"), config, transport)
     triples = jsonld_to_triples(spark, request["data"])
@@ -199,4 +214,5 @@ def anonymize_jsonld(
         include_original_data=request.get("includeOriginalData", False),
         use_adjusted_attributes=request.get("useAdjustedAttributes", True),
         random_seed=request.get("randomSeed"),
+        checkpoints=checkpoints,
     )

@@ -88,11 +88,16 @@ def release_rank_caches() -> int:
     """
     n = _drain(_cache_list())
     me = _threading.current_thread()
+    # only DETACH dead threads' lists under the lock; the unpersist calls
+    # (JVM round trips, one per frame) run after it is released, so a peer
+    # thread registering its first cache never waits on them
     with _all_lock:
-        for th, lst in list(_all_lists):
-            if th is not me and not th.is_alive():
-                n += _drain(lst)
-                _all_lists.remove((th, lst))
+        dead = [(th, lst) for th, lst in _all_lists
+                if th is not me and not th.is_alive()]
+        for entry in dead:
+            _all_lists.remove(entry)
+    for _, lst in dead:
+        n += _drain(lst)
     return n
 
 

@@ -74,18 +74,3 @@ def subjects_of_type(triples: DataFrame, type_iri: str) -> DataFrame:
         .distinct()
     )
 
-
-def attr_column(triples: DataFrame, subjects: DataFrame, attr_iri: str) -> DataFrame:
-    """One attribute's column vector: (subj, obj_value, obj_dtype, obj_is_iri).
-
-    Equivalent of one OPTIONAL arm of the reference's pivot query
-    (data/QueryBuildingService.java:31-46) restricted to present values —
-    the reference's per-attribute maps only hold non-null entries
-    (service/AnonymizationService.java:118-126).  The pred equality filter
-    prunes to a single predicate partition at scale.
-    """
-    return (
-        triples.filter(F.col("pred") == attr_iri)
-        .join(subjects, "subj", "left_semi")
-        .select("subj", "obj_value", "obj_dtype", "obj_is_iri")
-    )

@@ -35,7 +35,7 @@ def test_floor_bucket_differs_from_ntile(spark):
     col_df = spark.createDataFrame(
         rows, schema="subj string, obj_value string, obj_dtype string, obj_is_iri boolean, _tie long"
     )
-    out = generalize(col_df, "x", "double", 3, 10, F.col("_tie"))
+    out = generalize(col_df, [("x", "double", 3, 10)], F.col("_tie"))
     got = {
         r["subj"]: int(r["obj_value"].rsplit("_", 1)[-1])
         for r in out.filter(F.col("pred") == "x_generalized").collect()
@@ -49,7 +49,7 @@ def test_bucket_bounds_medians_and_obfuscation(spark):
     col_df = spark.createDataFrame(
         rows, schema="subj string, obj_value string, obj_dtype string, obj_is_iri boolean, _tie long"
     )
-    out = generalize(col_df, "x", "double", 3, 10, F.col("_tie")).collect()
+    out = generalize(col_df, [("x", "double", 3, 10)], F.col("_tie")).collect()
     from kgforge.triples import RDF_MAX, RDF_MIN, RDFS_COMMENT
 
     by = {}
@@ -80,7 +80,7 @@ def test_date_median_truncates_toward_zero(spark):
     col_df = spark.createDataFrame(
         rows, schema="subj string, obj_value string, obj_dtype string, obj_is_iri boolean, _tie long"
     )
-    out = generalize(col_df, "d", "date", 2, 4, F.col("_tie")).collect()
+    out = generalize(col_df, [("d", "date", 2, 4)], F.col("_tie")).collect()
     from kgforge.triples import RDF_MIN
 
     mins = {r["subj"]: r["obj_value"] for r in out if r["pred"] == RDF_MIN}
@@ -113,13 +113,13 @@ def test_randomize_partitioned_mode_runs(spark):
     col_df = spark.createDataFrame(
         rows, schema="subj string, obj_value string, obj_dtype string, obj_is_iri boolean, _tie long"
     )
-    out = randomize(col_df, "x", "double", 3, 100, seed=1234,
+    out = randomize(col_df, [("x", "double", 3, 100)], seed=1234,
                     order_col=F.col("_tie"), mode="partitioned")
     vals = {r["subj"]: float(r["obj_value"]) for r in out.collect()}
     assert len(vals) == 100
     assert all(0.0 <= v <= 99.0 for v in vals.values())  # clamped to [min,max]
     # deterministic given fixed partitioning inputs
-    out2 = randomize(col_df, "x", "double", 3, 100, seed=1234,
+    out2 = randomize(col_df, [("x", "double", 3, 100)], seed=1234,
                      order_col=F.col("_tie"), mode="partitioned")
     vals2 = {r["subj"]: float(r["obj_value"]) for r in out2.collect()}
     assert vals == vals2
@@ -131,12 +131,12 @@ def test_randomize_exact_stays_in_range_and_seeded(spark):
         rows, schema="subj string, obj_value string, obj_dtype string, obj_is_iri boolean, _tie long"
     )
     a = {r["subj"]: r["obj_value"] for r in
-         randomize(col_df, "x", "double", 2, 50, 99, F.col("_tie")).collect()}
+         randomize(col_df, [("x", "double", 2, 50)], 99, F.col("_tie")).collect()}
     b = {r["subj"]: r["obj_value"] for r in
-         randomize(col_df, "x", "double", 2, 50, 99, F.col("_tie")).collect()}
+         randomize(col_df, [("x", "double", 2, 50)], 99, F.col("_tie")).collect()}
     assert a == b  # same seed → identical
     c = {r["subj"]: r["obj_value"] for r in
-         randomize(col_df, "x", "double", 2, 50, 100, F.col("_tie")).collect()}
+         randomize(col_df, [("x", "double", 2, 50)], 100, F.col("_tie")).collect()}
     assert a != c  # different seed → different
 
 
@@ -203,6 +203,7 @@ def test_release_rank_caches_drains_dead_threads(spark):
     release — but never while the worker is still alive (that would
     reintroduce the cross-thread mid-query unpersist race)."""
     import threading
+    import time
 
     from kgforge import rank
 
@@ -216,10 +217,12 @@ def test_release_rank_caches_drains_dead_threads(spark):
 
     t = threading.Thread(target=worker)
     t.start()
+    deadline = time.monotonic() + 60
     while not any(
         th is t for th, _ in rank._all_lists
     ) and t.is_alive():  # wait for the worker to register its list
-        pass
+        assert time.monotonic() < deadline, "worker never registered a cache"
+        time.sleep(0.01)
     # worker alive: its caches are NOT drained by a main-thread release
     assert rank.release_rank_caches() == 0
     gate.set()

@@ -158,14 +158,14 @@ def test_generalize_plan_flat_at_large_g(spark):
     )
     plans = {}
     for g in (10, 10_000):
-        df = generalize(col_df, "http://ex.org/attr", "double", g, n)
+        df = generalize(col_df, [("http://ex.org/attr", "double", g, n)])
         plans[g] = df._jdf.queryExecution().optimizedPlan().toString()
         assert " IN (" not in plans[g]
     # plan text must not grow with g (allow slack for the differing digits)
     assert len(plans[10_000]) < len(plans[10]) + 2_000
     # and the boundary join must be a broadcast (ranked side never shuffles
     # for the boundary lookup)
-    big = generalize(col_df, "http://ex.org/attr", "double", 10_000, n)
+    big = generalize(col_df, [("http://ex.org/attr", "double", 10_000, n)])
     phys = big._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in phys
 
@@ -182,7 +182,7 @@ def test_generalize_large_g_bounds_match_driver_formula(spark):
         [(f"http://ex.org/r{i:05d}", str(v)) for i, v in enumerate(vals)],
         "subj string, obj_value string",
     )
-    out = generalize(col_df, "http://ex.org/a", "double", g, n)
+    out = generalize(col_df, [("http://ex.org/a", "double", g, n)])
     got_min = {
         r["subj"]: r["obj_value"]
         for r in out.filter(F.col("pred").endswith("min")).collect()

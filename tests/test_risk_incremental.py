@@ -77,7 +77,7 @@ def test_frozen_bounds_agree_with_generalize_interior(spark):
     )
     n = len(vals)
     g = calculate_number_of_buckets(n, 1)
-    out = generalize(df, "v", "double", g, n, F.col("_tie"))
+    out = generalize(df, [("v", "double", g, n)], F.col("_tie"))
     orig = {
         r["subj"]: int(r["obj_value"].rsplit("_", 1)[-1])
         for r in out.filter(F.col("pred") == "v_generalized").collect()
